@@ -6,9 +6,10 @@ rotating subset into the driver's 50-row correctness gate so the
 rotation exercises the FK-correlated fixture (glaredb_spark/
 tpcds_data.py) end-to-end under the external DuckDB oracle every round.
 
-Picks (each reads the reference's own query text at import, never
-vendored — the same contract as the SLT conformance harness; reference
-anchor: slt/tpcds/q*.slt):
+Picks (query texts from glaredb_spark/tpcds_spec.py: DuckDB 1.0.0's
+``tpcds_queries()`` rows, verbatim, checked against DuckDB by
+tests/test_registry.py; the reference's slt/tpcds/q*.slt carry the same
+queries, but the gate rows must load without the reference checkout):
 
 - q88 (r14): 8-way cross join of half-hour time-band counts — the
   time_dim minute grid, enumerated household combos, 'ese' store pool;
@@ -37,7 +38,6 @@ import tempfile
 from glaredb_spark.registry import register_query
 
 _GATE_ROOT = os.path.join(tempfile.gettempdir(), "glaredb_tpcds_gate")
-_SLT_DIR = "/root/reference/slt/tpcds"
 _PROMOTED = ("q88", "q04", "q64")
 # decimal output columns cast to DOUBLE in an identical outer SELECT
 # on BOTH engines (the query text itself stays verbatim): DuckDB's
@@ -55,14 +55,9 @@ def _gate_tables() -> dict:
 
 
 def _query_sql(qname: str) -> str:
-    from glaredb_spark.slt import parse_slt
+    from glaredb_spark.tpcds_spec import QUERIES
 
-    with open(os.path.join(_SLT_DIR, f"{qname}.slt")) as fh:
-        recs = [r for r in parse_slt(fh.read()) if r.kind == "query"]
-    sql = recs[0].sql.strip().rstrip(";")
-    if sql.upper().startswith("DESCRIBE"):
-        sql = sql[len("DESCRIBE"):].strip()
-    return sql
+    return QUERIES[qname].strip().rstrip(";").rstrip()
 
 
 def _used_tables(sql: str, paths: dict) -> list[str]:
@@ -114,8 +109,7 @@ def _make_row(qname: str):
         paths = _gate_tables()
         for t in tables:
             spark.read.parquet(paths[t]).createOrReplaceTempView(t)
-        s_sql = rewrite_sql("DESCRIBE " + sql,
-                            base_dir="/root/reference/slt")
+        s_sql = rewrite_sql("DESCRIBE " + sql)
         if s_sql.upper().startswith("DESCRIBE"):
             s_sql = s_sql[len("DESCRIBE"):].strip()
         out = GlareSession(spark).sql(s_sql)
@@ -126,8 +120,9 @@ def _make_row(qname: str):
     row.__name__ = f"tpcds_diff_{qname}"
     row.__doc__ = (
         f"TPC-DS {qname} verbatim on the differential fixture: Spark "
-        "runs the reference's own query text (through the SLT dialect "
-        "rewriter, the same path the 99-query differential uses); "
+        "runs DuckDB's tpcds_queries() text from tpcds_spec.py (through "
+        "the SLT dialect rewriter, the same path the 99-query "
+        "differential uses); "
         "DuckDB runs it against the identical parquet via the "
         "CTE-shadowed oracle."
     )

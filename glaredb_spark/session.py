@@ -496,6 +496,47 @@ DEFAULT_CONF = {
 }
 
 
+# cgroup memory limits (v2, then v1) as the container sees them; an unset
+# limit reads "max" (v2) or a near-2**63 sentinel (v1)
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _usable_memory_bytes() -> int:
+    """The memory this process may use: physical memory (``MemTotal``),
+    lowered to the cgroup memory limit when one is set."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            usable = min(usable, int(raw))
+    return usable
+
+
+def driver_heap_for(usable_bytes: int) -> str:
+    """The default driver heap for a host with ``usable_bytes`` of
+    memory: a quarter of it in whole GiB, at least 1g and at most 48g.
+    The JVM shares the host with the Python workers and the calling
+    process, so the heap must leave room for them; 192 GiB and larger
+    hosts keep 48g."""
+    return f"{max(1, min(48, usable_bytes // (4 << 30)))}g"
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for new sessions: ``SPARK_GRAFT_DRIVER_MEM``
+    when set (used unchanged), else derived from the host
+    (driver_heap_for)."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_heap_for(
+        _usable_memory_bytes()
+    )
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "glaredb_spark",
@@ -513,7 +554,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in DEFAULT_CONF.items():
         builder = builder.config(k, v)

@@ -1196,9 +1196,10 @@ def _register_tpcds_views(sess) -> None:
     but 11 qNN files carry value goldens captured from the absent
     tpcds_sf0.1 submodule. Tables those goldens constrain are re-derived
     from the goldens themselves (tpcds_fixture.py) and overlaid on the
-    schema-exact empty parquet built from describe_files.slt's goldens,
-    so the filled files reproduce their captured results while every
-    other file keeps executing to its empty golden."""
+    schema-exact empty parquet built from the in-repo DDL (tpcds_spec.py,
+    checked against describe_files.slt's goldens), so the filled files
+    reproduce their captured results while every other file keeps
+    executing to its empty golden."""
     from glaredb_spark import tpcds_fixture
     from glaredb_spark.sources.parquet_testing import (
         ensure_fixtures,

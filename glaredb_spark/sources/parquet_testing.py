@@ -682,32 +682,15 @@ def _gen_testdata(base):
     )
 
 
-_TPCDS_DESCRIBE = "/root/reference/slt/tpcds/describe_files.slt"
-
-
 def tpcds_schemas() -> dict[str, list[tuple[str, str]]]:
-    """Table -> [(column, reference type)] parsed from the reference's own
-    slt/tpcds/describe_files.slt goldens (the only schema source, since
-    the tpcds parquet binaries live in the not-checked-out submodule)."""
-    out: dict[str, list[tuple[str, str]]] = {}
-    cur: list[tuple[str, str]] | None = None
-    for ln in open(_TPCDS_DESCRIBE):
-        m = re.match(r"describe '.*/tpcds_sf0\.1/(\w+)\.parquet'", ln.strip())
-        if m:
-            cur = out.setdefault(m.group(1), [])
-            continue
-        if cur is None:
-            continue
-        s = ln.strip()
-        if s == "----" or s.startswith("#") or s.startswith("query"):
-            continue
-        if not s:
-            cur = None
-            continue
-        parts = s.split()
-        if len(parts) == 2:
-            cur.append((parts[0], parts[1]))
-    return out
+    """Table -> [(column, reference type)] from the in-repo TPC-DS DDL
+    (glaredb_spark/tpcds_spec.py: DuckDB 1.0.0's ``dsdgen(sf=0)`` schema
+    under the reference's type names). The tpcds parquet binaries live
+    in the reference's not-checked-out submodule, so this is the only
+    schema source."""
+    from glaredb_spark.tpcds_spec import SCHEMAS
+
+    return {t: list(cols) for t, cols in SCHEMAS.items()}
 
 
 def _pa_type(ref: str):
@@ -733,10 +716,11 @@ def _pa_type(ref: str):
 
 
 def _gen_tpcds(base):
-    """Empty schema-exact tpcds_sf0.1 parquet files: describe_files.slt
-    DESCRIBEs them; the q01-q99 SLTs run against temp views over them
-    (the reference's own goldens for those queries are empty — the suite
-    was never wired to data, see test_bin/integration_slt.rs)."""
+    """Empty schema-exact tpcds_sf0.1 parquet files (tpcds_schemas):
+    the reference's describe_files.slt DESCRIBEs them; the q01-q99 SLTs
+    run against temp views over them (the reference's own goldens for
+    those queries are empty — the suite was never wired to data, see
+    test_bin/integration_slt.rs)."""
     import pyarrow as pa
 
     for table, cols in tpcds_schemas().items():

@@ -4,8 +4,9 @@ The reference parks its slt/tpcds suite (68 of 99 query files have empty
 goldens — its own planner timed out before authoring them; see
 COVERAGE.md), so beyond the golden-checked files there is nothing to
 assert values against. This module closes that differently: a seeded,
-schema-exact dataset over all 24 tables (schemas from describe_files.slt
-via parquet_testing.tpcds_schemas) with the FK correlations the queries
+schema-exact dataset over all 24 tables (schemas from the in-repo DDL,
+tpcds_spec.py: DuckDB 1.0.0's dsdgen(sf=0) schema, read through
+parquet_testing.tpcds_schemas) with the FK correlations the queries
 join on — every fact *_sk samples a real dimension key, returns
 reference EXISTING sale line items (same item + ticket/order number),
 date_dim is a real 1998-2002 calendar (julian-style d_date_sk,
@@ -685,7 +686,7 @@ def ensure(root: str) -> dict[str, str]:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from glaredb_spark.sources.parquet_testing import tpcds_schemas
+    from glaredb_spark.sources.parquet_testing import _pa_type, tpcds_schemas
 
     os.makedirs(root, exist_ok=True)
     schemas = tpcds_schemas()
@@ -862,14 +863,6 @@ def ensure(root: str) -> dict[str, str]:
     # q54/q58/q64/q72/q85/q91) — see _plant
     _plant(rows_by_table, rng)
 
-    _PA = {
-        "Int32": pa.int32(),
-        "Utf8": pa.string(),
-        "Date32": pa.date32(),
-        "Decimal128(5,2)": pa.decimal128(5, 2),
-        "Decimal128(7,2)": pa.decimal128(7, 2),
-        "Decimal64(15,2)": pa.decimal128(15, 2),
-    }
     for t, rows in rows_by_table.items():
         cols = schemas[t]
         arrays = []
@@ -884,7 +877,7 @@ def ensure(root: str) -> dict[str, str]:
                     else decimal.Decimal(v).quantize(q)
                     for v in vals
                 ]
-            arrays.append(pa.array(vals, type=_PA[typ]))
+            arrays.append(pa.array(vals, type=_pa_type(typ)))
         pq.write_table(
             pa.table(dict(zip([c for c, _ in cols], arrays))),
             out[t] + ".tmp", compression="snappy",

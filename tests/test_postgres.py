@@ -3,6 +3,8 @@ sources/postgres.py read_postgres/ATTACH) against a real local server —
 including the reference's own slt/postgres suite. Skips when no server
 can be reached or started (tools/start_test_postgres.sh is the recipe)."""
 
+import os
+
 import pytest
 
 from tests.pg_util import CONN, PORT, ensure_pg_server  # noqa: F401
@@ -82,6 +84,9 @@ def test_attach_option_errors(spark, pg_server):
 
 def test_reference_postgres_slt(spark, pg_server):
     """The reference's own slt/postgres files, end-to-end."""
+    ref = "/root/reference/slt/postgres"
+    if not os.path.isdir(ref):
+        pytest.skip(f"reference slt tree not present: {ref}")
     from glaredb_spark import GlareSession
     from glaredb_spark.functions.register import register_all
     from glaredb_spark.slt import run_slt_file
@@ -89,6 +94,6 @@ def test_reference_postgres_slt(spark, pg_server):
     register_all(spark)
     sess = GlareSession(spark)
     for rel in ("read_postgres.slt", "attach.slt"):
-        res = run_slt_file(sess, f"/root/reference/slt/postgres/{rel}")
+        res = run_slt_file(sess, f"{ref}/{rel}")
         assert not res.failures, (rel, res.failures[:3])
         assert res.ok > 0
